@@ -506,7 +506,7 @@ object Bench {
       catch { case e: Exception => System.err.println(s"[bench] write $p: $e") }
     }
     val compact =
-      f"""{"metric":"total","unit":"sec","sf":"$sfDir","cpus":${cpus},"queries_n":${qs.size},"queries_file":"$out","errors":$ejson,"value":$total%.4f,"value_min":$totalMin%.4f,$pair}"""
+      f"""{"metric":"total","unit":"sec","sf":"$sfDir","cpus":${cpus},"queries_n":${qs.size},"queries_file":"$outC","errors":$ejson,"value":$total%.4f,"value_min":$totalMin%.4f,$pair}"""
     println(compact)
     if (compact.length > 1500)
       System.err.println(s"[bench] WARNING compact line ${compact.length} B > 1.5 kB tail budget")

@@ -15,16 +15,22 @@ import graft.query.QueryService
   *    (hepop.js:1024–1041); errors → 500 {"error": ...} (1053–1058)
   *  - POST /write with line-protocol body → 201 (hepop.js:1060–1100;
   *    query params are accepted and ignored like the reference —
-  *    SURVEY Appendix A#6)
+  *    SURVEY Appendix A#6); the body is empty when every line parses,
+  *    else `{"rejected":n}` counts the malformed lines that were dropped
   * Built on the JDK's HttpServer — no extra dependency; the executor is a
   * small pool because query work happens on Spark, not on these threads.
+  *
+  * TCP_NODELAY is on for every accepted connection (see the companion).
+  * The JDK server writes response headers and body as two segments; with
+  * Nagle's algorithm on, the body waits for the client to ACK the headers,
+  * and the client's delayed ACK holds every small response ~40 ms.
   */
 final class HttpApi(
     queryService: QueryService,
     appender: BufferedAppender,
     port: Int = 0) {
 
-  private val server = HttpServer.create(new InetSocketAddress(port), 64)
+  private val server = HttpApi.createServer(port)
   server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8, r => {
     val t = new Thread(r, "graft-http"); t.setDaemon(true); t
   }))
@@ -88,17 +94,33 @@ final class HttpApi(
         val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
         // Split on newlines, parse each non-empty line, bulk-append
         // (hepop.js:1062–1087). Bad lines are skipped like the reference's
-        // per-line try/catch (hepop.js:1068–1076).
-        val points = body.split("\n").iterator
+        // per-line try/catch (hepop.js:1068–1076), but counted back to the
+        // client instead of dropped silently.
+        val parsed = body.split("\n").iterator
           .map(_.trim).filter(_.nonEmpty)
-          .flatMap(LineProtocol.parse(_))
+          .map(LineProtocol.parse(_))
           .toSeq
+        val points = parsed.flatten
         appender.addLinePoints(points)
-        respond(ex, 201, "")
+        val rejected = parsed.length - points.length
+        respond(ex, 201, if (rejected == 0) "" else s"""{"rejected":$rejected}""")
       }
     } catch { case e: Exception => respond(ex, 500, jsonError(e.toString)) }
   })
 
   def start(): this.type = { server.start(); this }
   def stop(): Unit = server.stop(0)
+}
+
+object HttpApi {
+
+  // The JDK server reads `sun.net.httpserver.nodelay` once per JVM, when
+  // its config class loads on the first `HttpServer.create`; it defaults
+  // to false. Default it to true here, before any server exists in this
+  // JVM; an explicit -D setting still wins.
+  if (System.getProperty("sun.net.httpserver.nodelay") == null)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  private def createServer(port: Int): HttpServer =
+    HttpServer.create(new InetSocketAddress(port), 64)
 }

@@ -100,7 +100,7 @@ final class Storage(base: Path, pruneInScan: Boolean = false) extends TableProvi
           dbStream.iterator().asScala.flatMap { db =>
             val ts = Files.list(db)
             try ts.iterator().asScala
-              .map(_.getFileName.toString.replaceAll("-\\d+$", "")).toList
+              .map(t => Manifest.tableOfDirName(t.getFileName.toString)).toList
             finally ts.close()
           }.toList
         } finally dbStream.close()

@@ -55,9 +55,13 @@ final class ManifestFileIndex(
     val kept = entries.filter { case (f, _) =>
       f.max_time >= startNs && f.min_time <= endNs
     }
-    val statuses = kept.flatMap { case (f, p) =>
+    // One stat per kept file. A file a compaction deleted after the
+    // manifest was read is gone, not an error: its rows are in the
+    // compacted output the next manifest read lists.
+    val statuses = kept.flatMap { case (_, p) =>
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) Some(fs.getFileStatus(p)) else None
+      try Some(fs.getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
     }
     Seq(PartitionDirectory(InternalRow.empty, statuses.toArray))
   }

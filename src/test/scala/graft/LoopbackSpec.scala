@@ -70,6 +70,48 @@ class LoopbackSpec extends GraftSuite {
     } finally api.stop()
   }
 
+  test("small /query responses are not held by Nagle + delayed ACK") {
+    // No `q`: the 400 path, no Spark work and a ~30 B JSON body. With
+    // Nagle on, the body segment waits for the client's delayed ACK of
+    // the header segment, ~40 ms per request.
+    val base = Files.createTempDirectory("graft-nodelay")
+    val appender = new BufferedAppender(spark, base, bufferSize = 1000)
+    val api = new HttpApi(new QueryService(spark, new Storage(base)), appender, port = 0).start()
+    try {
+      val url = s"http://localhost:${api.boundPort}/query"
+      val ms = (0 until 30).map { _ =>
+        val t0 = System.nanoTime()
+        val (code, body) = get(url)
+        assert(code == 400 && body.contains("missing query"), s"$code $body")
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      val median = ms(ms.length / 2)
+      assert(median < 15.0, f"median round trip $median%.1f ms: ${ms.mkString(",")}")
+    } finally api.stop()
+  }
+
+  test("/write reports malformed lines as rejected and keeps the good ones") {
+    val base = Files.createTempDirectory("graft-rejected")
+    val appender = new BufferedAppender(spark, base, bufferSize = 1000)
+    val qs = new QueryService(spark, new Storage(base))
+    val api = new HttpApi(qs, appender, port = 0).start()
+    try {
+      val url = s"http://localhost:${api.boundPort}"
+      val t0 = System.currentTimeMillis() - 60000
+      val good = (0 until 3).map(i => s"rej v=$i.0 ${(t0 + i * 1000) * 1000000}")
+      val bad = Seq("rej", "rej v=")
+      val (wc, wbody) = post(s"$url/write", (good ++ bad).mkString("\n"))
+      assert(wc == 201 && wbody == """{"rejected":2}""", s"$wc $wbody")
+      // Every line parses: 201 with the reference's empty body.
+      val (oc, obody) = post(s"$url/write", s"rejok v=1.0 ${t0 * 1000000}")
+      assert(oc == 201 && obody.isEmpty, s"$oc $obody")
+      appender.flushAll()
+      val n = qs.execute("SELECT count() AS c FROM rej WHERE time >= '2000-01-01'")
+        .collect()(0).getLong(0)
+      assert(n == 3)
+    } finally api.stop()
+  }
+
   test("llm views are reachable through HTTP /query (standing-server wiring)") {
     // Same wiring Server.main performs under GRAFT_CORPUS_DIR: register
     // the views, serve /query over the session catalog.
